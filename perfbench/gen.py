@@ -10,7 +10,10 @@ geotag's city-skew classes (``doc_id % 5 < 2`` clusters on city
 ``doc_id % 8``) keep exactly the same shares for every seed.
 
 Text is a pure function of ``doc_id`` too: 4-16 words drawn from the
-31-word vocabulary of the project's test documents.
+31-word vocabulary of the project's test documents. Pages with
+``doc_id % 8`` of 1 or 2 repeat the text of the page one or two ids
+below, so a quarter of the pages sit in clusters of three exact
+duplicates and the dedup pairs and connected components have edges.
 
 Inputs are cached under ``<root>/.perfbench/cache``, keyed by kind, seed,
 row count and ``LAYOUT_V``; the oldest entries beyond ``KEEP`` are
@@ -28,7 +31,7 @@ from pathlib import Path
 
 import duckdb
 
-LAYOUT_V = "v1"
+LAYOUT_V = "v2"
 KEEP = 6
 VOCAB = (
     "a agg batch big column customer data dup fast filter group hash join key "
@@ -44,12 +47,12 @@ def documents_sql(seed: int, rows: int, part: range | None = None) -> str:
     if rows % 40:
         raise ValueError(f"rows must be a multiple of 40, got {rows}")
     part = part or range(rows)
-    # word k (k < 4 + h1 % 13) = VOCAB[h(doc_id, k) % 31], cut from one
+    # word k (k < 4 + h1 % 13) = VOCAB[h(text_id, k) % 31], cut from one
     # fixed-width string (plain string functions, no per-row list)
     padded = "".join(w.ljust(8) for w in VOCAB)
     words = ", ".join(
-        f"CASE WHEN {k} < 4 + hash(doc_id, 1) % 13 THEN "
-        f"rtrim(substr('{padded}', CAST(hash(doc_id, {k + 10}) % {len(VOCAB)} AS BIGINT) * 8 + 1, 8)) END"
+        f"CASE WHEN {k} < 4 + hash(text_id, 1) % 13 THEN "
+        f"rtrim(substr('{padded}', CAST(hash(text_id, {k + 10}) % {len(VOCAB)} AS BIGINT) * 8 + 1, 8)) END"
         for k in range(16)
     )
     text = f"concat_ws(' ', {words})"
@@ -58,7 +61,8 @@ def documents_sql(seed: int, rows: int, part: range | None = None) -> str:
     return f"""
 SELECT doc_id, text, lang, source, CAST(length(text) AS BIGINT) AS n_chars FROM (
   SELECT doc_id, {text} AS text, {lang} AS lang, 'src' || CAST(hash(doc_id, 3) % 20 AS VARCHAR) AS source
-  FROM (SELECT CAST(range + {seed * rows} AS BIGINT) AS doc_id FROM range({part.start}, {part.stop})))"""
+  FROM (SELECT doc_id, doc_id - CASE WHEN doc_id % 8 IN (1, 2) THEN doc_id % 8 ELSE 0 END AS text_id
+        FROM (SELECT CAST(range + {seed * rows} AS BIGINT) AS doc_id FROM range({part.start}, {part.stop}))))"""
 
 
 def pages_sql(seed: int, rows: int, part: range | None = None) -> str:

@@ -22,12 +22,10 @@ import shutil
 import statistics
 import sys
 import time
-import traceback
 from pathlib import Path
 
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
-SETUPS = 3  # set-ups per run; setup_s is their median
 
 
 def _fail(msg: str) -> None:
@@ -74,6 +72,12 @@ class PeakRss:
         self.mb = max(self.mb, total / 1024)
 
 
+def _cpu_jiffies() -> tuple[int, int]:
+    """(stolen, total) CPU time of the machine so far, from /proc/stat."""
+    f = [int(x) for x in Path("/proc/stat").read_text().split("\n", 1)[0].split()[1:9]]
+    return f[7], sum(f)
+
+
 def _ram_gb() -> float:
     for line in Path("/proc/meminfo").read_text().splitlines():
         if line.startswith("MemTotal:"):
@@ -114,32 +118,16 @@ def _stop(spark) -> None:
         gateway.proc.wait(timeout=60)
 
 
-def measure(wl, seconds: float, rss: PeakRss) -> tuple[dict, int, list]:
-    """Closed loop over the workload's operations, after its untimed
-    warm-up, for `seconds` and at least ``wl.min_passes`` passes. Returns
-    per-operation walls of the passing runs, attempts, failures."""
-    wl.warm()
-    samples: dict[str, list[float]] = {op: [] for op in wl.ops}
-    attempted, errors = 0, []
+def measure(wl, ops, seconds: float) -> None:
+    """Closed loop over the workload's operations for `seconds` and at
+    least ``wl.min_passes`` passes, each operation run and checked by
+    `ops` (a ``workloads.Checked``)."""
     deadline = time.perf_counter() + seconds
     for done in itertools.count(1):
         for op in wl.ops:
-            attempted += 1
-            try:
-                t0 = time.perf_counter()
-                result = wl.run(op)
-                wall = time.perf_counter() - t0
-                err = wl.check(op, result)
-            except Exception:  # a failed operation is counted, not fatal
-                err = traceback.format_exc()
-                print(err, file=sys.stderr)
-            if err:
-                errors.append({"op": op, "error": err[-2000:]})
-            else:
-                samples[op].append(wall)
-            rss.sample()
+            ops(op)
         if done >= wl.min_passes and time.perf_counter() >= deadline:
-            return samples, attempted, errors
+            return
 
 
 def main() -> int:
@@ -155,10 +143,10 @@ def main() -> int:
     if missing or bench_spec is None:
         _fail(f"not a repository checkout (missing {missing or ['BENCHMARK.json']}); run from its root")
     sys.path[:0] = [str(HERE), str(ROOT), str(ROOT / "tests")]
-    from workloads import WORKLOADS
+    import workloads
 
-    if args.workload not in WORKLOADS:
-        _fail(f"unknown workload {args.workload!r}; choose from {sorted(WORKLOADS)}")
+    if args.workload not in workloads.WORKLOADS:
+        _fail(f"unknown workload {args.workload!r}; choose from {sorted(workloads.WORKLOADS)}")
 
     cpus = len(os.sched_getaffinity(0))
     driver_gb = max(1, min(8, int(_ram_gb() * 0.2)))
@@ -176,40 +164,39 @@ def main() -> int:
     )
     import gen
 
-    wl = WORKLOADS[args.workload]()
+    wl = workloads.WORKLOADS[args.workload]()
     rss = PeakRss()
-    setups, spark = [], None
+    stolen0, total0 = _cpu_jiffies()
+    spark = None
     try:
         inp, gen_s, meta = gen.ensure_input(ROOT, wl.name, args.seed, wl.rows, wl.build)
-        # set-up 1: JVM, session, Python-worker warm-up, driver-side fixtures
+        # set-up: JVM launch, session, Python-worker warm-up, driver-side
+        # fixtures. Once per run — each set-up launches its own JVM, which
+        # costs about as much as the measurement — so the median over a
+        # series of runs is what steadies setup_s.
         t0 = time.perf_counter()
         spark = _session(cpus, wl)
         wl.prepare(spark, inp, meta, work)
-        setups.append(time.perf_counter() - t0)
+        setup_s = time.perf_counter() - t0
         rss.sample()
 
-        samples, attempted, errors = measure(wl, args.seconds, rss)
-        medians = {op: statistics.median(v) for op, v in samples.items() if v}
-        wall = sum(medians.values())  # a failed run (exit 1) may miss operations
+        ops = workloads.Checked(wl, after=rss.sample)
+        wl.warm()
         if args.trace:
             import spans
 
             tracer = spans.Tracer(spark)
-            layers = wl.traced_layers(tracer, passes=wl.traced_passes)
+            layers = wl.traced_layers(tracer, ops)
             layers.update(_trace_summary(tracer, wl))
             tdir = ROOT / ".perfbench" / "traces"
             tdir.mkdir(parents=True, exist_ok=True)
             (tdir / f"{wl.name}-seed{args.seed}.json").write_text(
                 json.dumps({"spans": tracer.dump(), "metrics": layers}, indent=1))
-        # set-ups 2..SETUPS, after the measurement: a new session in the
-        # same JVM, warm-up, driver-side fixtures
-        for _ in range(SETUPS - 1):
-            spark.stop()
-            t0 = time.perf_counter()
-            spark = _session(cpus, wl)
-            wl.prepare(spark, inp, meta, work)
-            setups.append(time.perf_counter() - t0)
-            rss.sample()
+        else:
+            measure(wl, ops, args.seconds)
+        samples, attempted, errors = ops.samples, ops.attempted, ops.errors
+        medians = {op: statistics.median(v) for op, v in samples.items() if v}
+        wall = sum(medians.values())  # a failed run (exit 1) may miss operations
         if args.trace:
             metrics = {m["name"]: {"value": float(layers.get(m["name"], 0.0)), "unit": m["unit"]}
                        for m in bench_spec["per_layer"]}
@@ -217,7 +204,7 @@ def main() -> int:
             values = {
                 "wall_s": wall,
                 "pages_per_s": wl.pages / wall if wall else 0.0,
-                "setup_s": statistics.median(setups),
+                "setup_s": setup_s,
             }
             metrics = {m["name"]: {"value": values[m["name"]], "unit": m["unit"]}
                        for m in bench_spec["end_to_end"]}
@@ -231,7 +218,10 @@ def main() -> int:
             "pyspark": pyspark.__version__,
             "java": spark._jvm.java.lang.System.getProperty("java.version"),
             "encode_arm": wl.encode_arm, "pages": wl.pages,
-            "input_gen_s": gen_s, "setup_samples_s": setups, "peak_rss_mb": rss.mb,
+            "input_gen_s": gen_s, "peak_rss_mb": rss.mb,
+            # the share of the machine's CPU time the hypervisor gave to
+            # other guests during the run: a slow run on a shared host
+            "steal_share": (_cpu_jiffies()[0] - stolen0) / max(1, _cpu_jiffies()[1] - total0),
             "op_walls_s": samples,
             "failed_frac": len(errors) / attempted, "errors": errors,
             "bw_ceiling_bytes_per_s": bench.measure_bw_ceiling(cpus, n=4_000_000, reps=5),
@@ -246,18 +236,12 @@ def main() -> int:
 
 
 def _trace_summary(tracer, wl) -> dict:
-    """Per-query span walls, Spark job/task totals, and the tracing
-    overhead: traced minus untraced pass wall, from passes interleaved
-    within the traced run."""
-    passes = [s for s in tracer.spans if s["name"] == "pass"]
+    """Per-query span walls and Spark job/task totals per traced pass."""
     jobs, tasks = tracer.jobs_and_tasks(tracer.spans)
-    out = {"spark.jobs": jobs / len(passes), "spark.tasks": tasks / len(passes)}
-    traced = 0.0
+    out = {"spark.jobs": jobs / wl.traced_passes, "spark.tasks": tasks / wl.traced_passes}
     for op in wl.ops:
         walls = [s["end"] - s["start"] for s in tracer.spans if s["name"] == wl.query_span(op)]
         out[f"query.{op}_s"] = statistics.median(walls)
-        traced += out[f"query.{op}_s"]
-    out["trace.overhead_s"] = traced - statistics.median(wl.untraced_pass_s)
     return out
 
 

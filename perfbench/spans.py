@@ -6,6 +6,11 @@ name, start, end and parent, and runs under its own Spark job group so
 the jobs it triggers can be counted through ``statusTracker()``. Spans
 stay in memory and are written as JSON when the run ends.
 
+A wrapped call that only builds a lazy plan is timed twice over: its
+span covers the driver-side planning, and :meth:`Tracer.run_lazy` later
+executes what it returned and what it was given, so the layer's
+execution time is the difference of the two (a prefix marginal).
+
 Row, byte, shuffle, spill and Python-boundary figures come from the SQL
 metrics Spark keeps for every executed query
 (:func:`harvest_sql_metrics`).
@@ -19,6 +24,7 @@ import time
 from contextlib import contextmanager
 
 import numpy as np
+from pyspark.sql import DataFrame
 
 
 class Tracer:
@@ -28,16 +34,7 @@ class Tracer:
         self._stack: list[dict] = []
         self._patches: list[tuple[object, str, object]] = []
         self._n = 0
-        self.enabled = True
-
-    @contextmanager
-    def paused(self):
-        """Run the block untraced: wrapped calls go straight through."""
-        self.enabled = False
-        try:
-            yield
-        finally:
-            self.enabled = True
+        self.own_s = 0.0  # wall spent in the tracer's bookkeeping
 
     def _set_group(self, rec: dict | None) -> None:
         if rec is None:
@@ -47,6 +44,7 @@ class Tracer:
 
     @contextmanager
     def span(self, name: str, **attrs):
+        t0 = time.perf_counter()
         parent = self._stack[-1] if self._stack else None
         self._n += 1
         rec = {"id": f"span-{self._n}", "name": name,
@@ -54,6 +52,7 @@ class Tracer:
         self._stack.append(rec)
         self._set_group(rec)
         rec["start"] = time.perf_counter()
+        self.own_s += rec["start"] - t0
         try:
             yield rec
         finally:
@@ -61,29 +60,28 @@ class Tracer:
             self._stack.pop()
             self._set_group(parent)
             self.spans.append(rec)
+            self.own_s += time.perf_counter() - rec["end"]
 
     def wrap(self, owner, attr: str, layer: str, rows: bool = False,
-             rows_in: bool = False, name_arg: int | None = None) -> None:
+             rows_in: bool = False, lazy: bool = False, name_arg: int | None = None) -> None:
         """Replace ``owner.attr`` — and every binding of the same function
         object in the project's loaded modules — by a span-recording
         wrapper. ``rows`` / ``rows_in``: count the returned DataFrame / the
-        first argument later (:meth:`count_outputs`). ``name_arg``: index
-        of a positional argument appended to the span name
-        (``CheckpointedPipeline.stage`` -> ``stage.encode``)."""
+        first argument later (:meth:`run_lazy`). ``lazy``: the call
+        returns an unexecuted DataFrame; time its execution later
+        (:meth:`run_lazy`). ``name_arg``: index of a positional argument
+        appended to the span name (``CheckpointedPipeline.stage`` ->
+        ``stage.encode``)."""
         orig = getattr(owner, attr)
 
         def wrapper(*args, **kwargs):
-            if not self.enabled:
-                return orig(*args, **kwargs)
             name = layer if name_arg is None else f"{layer}.{args[name_arg]}"
             with self.span(name, fn=attr) as rec:
                 out = orig(*args, **kwargs)
             if isinstance(out, np.ndarray):
                 rec["cells"] = int(out.shape[0])
-            if rows:
-                rec["df"] = out
-            if rows_in:
-                rec["df_in"] = args[0]
+            rec.update(df=out, df_in=args[0] if args and isinstance(args[0], DataFrame) else None,
+                       count=rows, count_in=rows_in, lazy=lazy)
             return out
 
         owners = [owner] + [
@@ -101,14 +99,43 @@ class Tracer:
             setattr(o, attr, orig)
         self._patches.clear()
 
-    def count_outputs(self) -> None:
-        """Count the rows of every DataFrame a wrapped call returned —
-        extra actions, run after the timed pass and outside any span."""
+    def run_lazy(self) -> None:
+        """For every span of a lazy call, execute (to Spark's ``noop``
+        sink) the DataFrame it returned and the one it was given; the
+        span's ``exec_s`` is the difference — the layer's own execution
+        time. Then count the rows ``wrap`` asked for. Extra actions, run
+        after the timed passes and outside any span; each DataFrame runs
+        once, and an executed one is counted as it runs."""
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        walls: dict[int, float] = {}
+        rows: dict[int, int] = {}
+
+        def wall(df) -> float:
+            if df is None:
+                return 0.0
+            if id(df) not in walls:
+                obs = Observation()
+                t0 = time.perf_counter()
+                df.observe(obs, F.count(F.lit(1)).alias("n")).write.format("noop").mode("overwrite").save()
+                walls[id(df)] = time.perf_counter() - t0
+                rows[id(df)] = obs.get["n"]
+            return walls[id(df)]
+
+        def count(df) -> int:
+            if id(df) not in rows:
+                rows[id(df)] = df.count()
+            return rows[id(df)]
+
         for rec in self.spans:
-            for key, out in (("df", "rows"), ("df_in", "rows_in")):
-                df = rec.pop(key, None)
-                if df is not None:
-                    rec[out] = df.count()
+            df, df_in = rec.pop("df", None), rec.pop("df_in", None)
+            if rec.get("lazy"):
+                rec["exec_s"] = wall(df) - wall(df_in)
+            if rec.pop("count", False):
+                rec["rows"] = count(df)
+            if rec.pop("count_in", False):
+                rec["rows_in"] = count(df_in)
 
     def jobs_and_tasks(self, recs: list[dict]) -> tuple[int, int]:
         st = self.sc.statusTracker()
@@ -127,7 +154,16 @@ class Tracer:
         return jobs, tasks
 
     def dump(self) -> list[dict]:
+        """The spans, without the DataFrames :meth:`run_lazy` has not
+        consumed yet."""
         return [{k: v for k, v in s.items() if k not in ("df", "df_in")} for s in self.spans]
+
+
+def layer_s(rec: dict) -> float:
+    """A span's layer time: the call's own wall (driver-side work, and the
+    Spark jobs of an eager call) plus, for a lazy call, the execution
+    marginal :meth:`Tracer.run_lazy` measured."""
+    return rec["end"] - rec["start"] + rec.get("exec_s", 0.0)
 
 
 # ---------------------------------------------------------------------------
@@ -170,9 +206,11 @@ def last_execution_id(spark) -> int:
     return last
 
 
-def harvest_sql_metrics(spark, after_id: int) -> dict[str, float]:
+def harvest_sql_metrics(spark, after_id: int, scan_path: str) -> dict[str, float]:
     """Sum the SQL metrics of :data:`SQL_METRICS` over every query executed
-    after execution id `after_id`."""
+    after execution id `after_id`. Scan metrics count only scans of the
+    workload's input, `scan_path` — not re-reads of checkpoint snapshots
+    or other files."""
     store = spark._jsparkSession.sharedState().statusStore()
     out = dict.fromkeys(set(SQL_METRICS.values()), 0.0)
     it = store.executionsList().iterator()
@@ -184,6 +222,8 @@ def harvest_sql_metrics(spark, after_id: int) -> dict[str, float]:
         nodes = store.planGraph(eid).allNodes().iterator()
         while nodes.hasNext():
             node = nodes.next()
+            if node.name().startswith("Scan parquet") and scan_path not in node.desc():
+                continue
             ms = node.metrics().iterator()
             while ms.hasNext():
                 m = ms.next()

@@ -3,10 +3,11 @@
 Each workload generates its seeded input once (``build``), prepares its
 driver-side fixtures as part of set-up (``prepare``; ``work`` is a
 scratch directory), warms up untimed (``warm``), then runs a fixed list
-of operations in a closed loop — one at a time, the next starting only after the previous one
-finished. ``run(op)`` is the timed part and
-returns what ``check(op, result)`` verifies, untimed, on every run.
-``traced_layers`` returns the per-layer figures of a traced run.
+of operations in a closed loop — one at a time, the next starting only
+after the previous one finished. ``run(op)`` is the timed part and
+returns what ``check(op, result)`` verifies, untimed, on every run
+(:class:`Checked`). ``traced_layers`` returns the per-layer figures of a
+traced run.
 """
 
 from __future__ import annotations
@@ -14,7 +15,9 @@ from __future__ import annotations
 import contextlib
 import shutil
 import statistics
+import sys
 import time
+import traceback
 from collections import Counter
 from pathlib import Path
 
@@ -22,6 +25,41 @@ import duckdb
 
 import gen
 import spans as T
+
+
+class Checked:
+    """Runs a workload's operations one at a time and checks every output.
+    Keeps the walls of the operations that passed, the attempts and the
+    failures; a failed operation is counted, not fatal."""
+
+    def __init__(self, wl, after=lambda: None):
+        self.wl, self.after = wl, after
+        self.samples: dict[str, list[float]] = {op: [] for op in wl.ops}
+        self.attempted = 0
+        self.errors: list[dict] = []
+
+    def __call__(self, op: str, run=None, span=None, then=lambda: None) -> float:
+        """Time ``run()`` (default ``wl.run(op)``) inside `span`, call
+        ``then()``, then check the result outside the span. Returns the
+        wall."""
+        self.attempted += 1
+        wall = 0.0
+        try:
+            with span or contextlib.nullcontext():
+                t0 = time.perf_counter()
+                result = run() if run else self.wl.run(op)
+                wall = time.perf_counter() - t0
+            then()
+            err = self.wl.check(op, result)
+        except Exception:
+            err = traceback.format_exc()
+            print(err, file=sys.stderr)
+        if err:
+            self.errors.append({"op": op, "error": err[-2000:]})
+        else:
+            self.samples[op].append(wall)
+        self.after()
+        return wall
 
 
 def _box_sql() -> str:
@@ -43,7 +81,7 @@ class TagRollup:
     rows = 2_000_000
     files = 16
     ops = ("tag_rollup",)
-    min_passes = 4
+    min_passes = 5
     traced_passes = 2
     encode_arm = "native"
     adaptive = False  # bench.make_spark's setting, which tests/test_plans.py pins the plan under
@@ -93,13 +131,10 @@ class TagRollup:
         return bench.throughput_result_df(self.spark, with_cell_id(self.scan(path), level=30), self.cov)
 
     def warm(self) -> None:
-        """Two untimed passes over one file of the table before measuring.
-        The job's generated code is JIT-compiled during its first passes on
-        a fresh JVM; a one-file pass runs as one task, which leaves the
-        other cores to the compiler threads."""
-        one_file = str(sorted(Path(self.path).glob("*.parquet"))[0])
-        for _ in range(2):
-            self.job(one_file).collect()
+        """One untimed pass before measuring: the first pass on a fresh JVM
+        runs mostly interpreted while the job's generated code compiles,
+        and takes about three times a later pass."""
+        self.job().collect()
 
     def run(self, op: str):
         row = self.job().collect()[0]
@@ -111,9 +146,14 @@ class TagRollup:
             return f"(p, m) = ({p}, {m}), expected ({self.pages}, {self.expected_m})"
         return None
 
-    def traced_layers(self, tracer: T.Tracer, passes: int) -> dict:
+    def traced_layers(self, tracer: T.Tracer, ops: Checked) -> dict:
         """Layer walls as marginal walls of nested prefix actions of the
-        same job: scan-only -> +encode -> +join -> +flag+rollup."""
+        same job: scan-only -> +encode -> +join -> +flag+rollup, each
+        timed from building its DataFrame (``plan.s``: the full job's
+        driver-side analysis) to its collected row. Each
+        traced pass is followed by a checked untraced pass of the job; the
+        tracing overhead is the traced job's wall minus the untraced
+        one's."""
         from pyspark.sql import functions as F
 
         from s2cell_spark.functions.exprs import cell_id_to_parent_cell_id_unchecked as parent_u
@@ -128,21 +168,23 @@ class TagRollup:
             .agg(F.count("region_id"), F.bit_xor("cell_id")),
             "rollup": self.job,
         }
-        walls = {k: [] for k in prefixes}
-        rows, sql = {}, Counter()
-        self.untraced_pass_s = []
+        passes = self.traced_passes
+        walls, plan = {k: [] for k in prefixes}, []
+        rows, sql, untraced = {}, Counter(), []
         for _ in range(passes):
-            t0 = time.perf_counter()
-            self.run("tag_rollup")
-            self.untraced_pass_s.append(time.perf_counter() - t0)
             first_exec = T.last_execution_id(spark)
             with tracer.span("pass"):
                 for k, make in prefixes.items():
-                    df = make()
-                    with tracer.span(f"prefix.{k}"):
+                    # building the DataFrame analyzes its plan on the driver,
+                    # a large share of a pass: it is part of the prefix
+                    with tracer.span(f"prefix.{k}") as rec:
+                        with tracer.span(f"plan.{k}") as planned:
+                            df = make()
                         rows[k] = df.collect()[0]
-                    walls[k].append(tracer.spans[-1]["end"] - tracer.spans[-1]["start"])
-            sql.update(T.harvest_sql_metrics(spark, first_exec))
+                    walls[k].append(rec["end"] - rec["start"])
+                plan.append(planned["end"] - planned["start"])
+            sql.update(T.harvest_sql_metrics(spark, first_exec, self.path))
+            untraced.append(ops("tag_rollup"))
         med = {k: statistics.median(v) for k, v in walls.items()}
         cells = with_cell_id(scan(), level=30).select(parent_u(F.col("cell_id"), 8)).distinct().count()
         candidates = int(rows["join"][0])
@@ -165,7 +207,9 @@ class TagRollup:
             "udf.bytes_from_python": sql["py_recv"] / passes,
             "spark.shuffle_bytes": sql["shuffle_bytes"] / passes,
             "spark.spill_bytes": sql["spill_bytes"] / passes,
+            "plan.s": statistics.median(plan),
             "plan.optimized_bytes": T.optimized_plan_bytes(prefixes["rollup"]()),
+            "trace.overhead_s": med["rollup"] - statistics.median(untraced),
         }
 
 
@@ -180,17 +224,23 @@ class _Collected:
         return self.pdf
 
 
-class ClusterCheckpoint:
-    """Two jobs over a small seeded documents table, where fixed per-job
-    costs dominate: the ``spatial_clusters`` registry query (level-7 dense
-    cells -> 4-adjacency pairs -> connected-components star rounds) and
-    the ``scripts/run_pipeline.py`` stage graph through
+class QueryMix:
+    """Small jobs over a seeded 400-page documents table, where fixed
+    per-job costs dominate, each run once per run, cold, as a session's
+    first job of its kind: three registry queries — the exact-Jaccard arm
+    of ``dup_clusters`` (capped Jaccard pairs -> connected-components
+    star rounds; the MinHash arm repeats the same rounds and is left out
+    to keep a run short), ``knn_pages`` (ring search + verified re-query)
+    and ``within_radius`` (cap coverings -> containment join -> exact
+    haversine) — and the
+    ``scripts/run_pipeline.py`` stage graph through
     ``CheckpointedPipeline`` (a fresh pass, then a resume pass over the
-    complete snapshots). Both encode through the pandas-UDF arm."""
+    complete snapshots). Everything encodes through the pandas-UDF arm."""
 
-    name = "cluster_checkpoint"
+    name = "query_mix"
     rows = 400
-    ops = ("spatial_clusters", "checkpoint_pipeline")
+    queries = ("dup_clusters_jaccard", "knn_pages", "within_radius")
+    ops = queries + ("checkpoint_pipeline",)
     min_passes = 1
     traced_passes = 1
     encode_arm = "pandas-udf"
@@ -202,9 +252,7 @@ class ClusterCheckpoint:
         return f"query.{op}"
 
     def warm(self) -> None:
-        """Nothing: each operation runs once per run, cold, as a session's
-        first job of its kind."""
-
+        """Nothing: each operation runs once per run, cold."""
 
     def build(self, path: Path, seed: int, rows: int) -> dict:
         gen.write_parquet(lambda part: gen.documents_sql(seed, rows, part), rows, path / "documents.parquet")
@@ -216,13 +264,14 @@ class ClusterCheckpoint:
         self.spark = spark
         self.sf = str(path)
         self.pages = meta["pages"]
-        self.query = E.queries()["spatial_clusters"]
+        self.registry = {**E.queries(), "dup_clusters_jaccard": E._q_dup_clusters}
+        self.oracles = {**E.oracle_sql(), "dup_clusters_jaccard": E._dup_clusters_oracle()}
         self.ckpt = work / "pipeline"
         self.resume_s = 0.0
 
     def run(self, op: str, tracer: T.Tracer | None = None):
-        if op == "spatial_clusters":
-            return self.query(self.spark, self.sf).toPandas()
+        if op in self.queries:
+            return self.registry[op](self.spark, self.sf).toPandas()
         shutil.rmtree(self.ckpt, ignore_errors=True)
         with _maybe_span(tracer, "pipeline.fresh"):
             fresh = self._pipeline()
@@ -269,8 +318,8 @@ class ClusterCheckpoint:
         import oracle_util
 
         oracle_util.TABLES = ("documents",)  # the only table generated
-        if op == "spatial_clusters":
-            got = [(result, E.oracle_sql()["spatial_clusters"])]
+        if op in self.queries:
+            got = [(result, self.oracles[op])]
         else:
             fresh, resumed, files_before, files_after = result
             if fresh != resumed:
@@ -280,68 +329,76 @@ class ClusterCheckpoint:
             if fresh["encode"] != self.pages:
                 return f"encode rows {fresh['encode']} != {self.pages}"
             got = [(self.frames["pip"].select("region_id", "doc_id").toPandas(), E._pip_oracle()),
-                   (self.frames["tiles"].toPandas(), E.oracle_sql()["tile_heatmap_z6"])]
+                   (self.frames["tiles"].toPandas(), self.oracles["tile_heatmap_z6"])]
         for pdf, sql in got:
             ok, msg = oracle_util.compare(_Collected(pdf), sql, self.sf)
             if not ok:
                 return msg
         return None
 
-    def traced_layers(self, tracer: T.Tracer, passes: int) -> dict:
-        """Run `passes` passes with the layers wrapped. A layer's time is
-        the total of its calls' spans: eager calls (components, pipeline
-        stages) include their Spark jobs, lazy ones only their driver-side
-        planning — their jobs run under the enclosing query span."""
-        from s2cell_spark.operators import components, containment, covering, spatialcluster
+    def traced_layers(self, tracer: T.Tracer, ops: Checked) -> dict:
+        """One checked pass with the layers wrapped, cold like an untraced
+        run's. A layer's time is the total over its calls of
+        :func:`spans.layer_s`: the call's wall (an eager call's Spark jobs
+        included) plus, for a call that returns a lazy plan, that plan's
+        execution marginal over its input. Layers nest (a covering built
+        inside ``knn`` counts for both). The tracing overhead is the
+        tracer's own bookkeeping time within the pass: a cold pass cannot
+        be repeated untraced in the same session."""
+        from s2cell_spark.operators import components, containment, covering, dedup, knn, radius
         from s2cell_spark.plans.checkpoint import CheckpointedPipeline
         from s2cell_spark.sources import pages
 
-        tracer.wrap(pages, "load_pages", "scan")
-        tracer.wrap(pages, "with_cell_id", "encode")
+        tracer.wrap(pages, "load_pages", "scan", lazy=True)
+        tracer.wrap(pages, "with_cell_id", "encode", lazy=True)
         tracer.wrap(covering, "latlng_rect_covering", "cover")
-        tracer.wrap(containment, "containment_join_equi", "join", rows=True)
-        tracer.wrap(spatialcluster, "dense_cells", "pairs")
-        tracer.wrap(spatialcluster, "adjacency_edges", "pairs", rows=True)
+        tracer.wrap(covering, "cap_covering", "cover")
+        tracer.wrap(containment, "containment_join_equi", "join", rows=True, lazy=True)
+        tracer.wrap(containment, "containment_join_range", "join", rows=True, lazy=True)
+        tracer.wrap(knn, "knn", "knn", rows=True, lazy=True)
+        tracer.wrap(radius, "within_radius_join", "knn", rows=True, lazy=True)
+        tracer.wrap(dedup, "jaccard_pairs_exact", "pairs", rows=True, lazy=True)
+        tracer.wrap(dedup, "minhash_near_dup_pairs", "pairs", rows=True, lazy=True)
         tracer.wrap(components, "connected_components", "components", rows_in=True)
         tracer.wrap(CheckpointedPipeline, "stage", "stage", rows=True, name_arg=1)
+        passes = self.traced_passes
         resume, sql = [], Counter()
-        self.untraced_pass_s = []
         try:
             for _ in range(passes):
-                with tracer.paused():
-                    t0 = time.perf_counter()
-                    for op in self.ops:
-                        self.run(op)
-                    self.untraced_pass_s.append(time.perf_counter() - t0)
-                first_exec = T.last_execution_id(self.spark)
-                with tracer.span("pass"):
-                    for op in self.ops:
-                        with tracer.span(f"query.{op}"):
-                            self.run(op, tracer)
-                    resume.append(self.resume_s)
-                sql.update(T.harvest_sql_metrics(self.spark, first_exec))
+                for op in self.ops:
+                    # SQL metrics of the operation's queries, not of its check
+                    first_exec = T.last_execution_id(self.spark)
+                    ops(op, lambda: self.run(op, tracer), span=tracer.span(f"query.{op}"),
+                        then=lambda: sql.update(T.harvest_sql_metrics(self.spark, first_exec, self.sf)))
+                resume.append(self.resume_s)
         finally:
             tracer.unwrap()
-        tracer.count_outputs()
+        overhead = tracer.own_s / passes
+        tracer.run_lazy()
         spans = tracer.spans
         by_id = {s["id"]: s for s in spans}
 
-        def total(name, key=None, parent=None):
-            """Sum over spans `name` (under a `parent` span at any depth)."""
-            recs = [s for s in spans if s["name"] == name and (parent is None or parent in _ancestors(s, by_id))]
-            if key is None:
-                return sum(s["end"] - s["start"] for s in recs) / passes
-            return sum(s.get(key, 0) for s in recs) / passes
+        def select(name, under=None):
+            """Spans `name`, only those with every span of `under` among
+            their ancestors."""
+            return [s for s in spans if s["name"] == name
+                    and set(under or ()) <= set(_ancestors(s, by_id))]
 
-        # covering selectivity: the rows the containment join produced vs
-        # the rows the pip stage kept after the exact test
-        candidates = sum(s["rows"] for s in spans if s["name"] == "join"
-                         and _ancestors(s, by_id)[:2] == ["stage.pip", "pipeline.fresh"])
-        exact = total("stage.pip", "rows", parent="pipeline.fresh") * passes
-        comp_jobs, _ = tracer.jobs_and_tasks([s for s in spans if s["name"] == "components"])
+        def total(name, key=None, under=None):
+            recs = select(name, under)
+            return sum(T.layer_s(s) if key is None else s.get(key, 0) for s in recs) / passes
+
+        # the pipeline's containment join: candidates it produced vs the
+        # rows the pip stage kept after the exact test
+        pip_join = ("stage.pip", "pipeline.fresh")
+        candidates = total("join", "rows", under=pip_join)
+        exact = total("stage.pip", "rows", under=("pipeline.fresh",))
+        # knn / radius: verification-join candidates per result row
+        knn_candidates = total("join", "rows", under=("knn",))
+        comp_jobs, _ = tracer.jobs_and_tasks(select("components"))
         written = sum(f.stat().st_size for f in self.ckpt.rglob("*.parquet"))
         input_bytes = (Path(self.sf) / "documents.parquet").stat().st_size
-        query_plan = self.query(self.spark, self.sf)
+        fresh = ("pipeline.fresh",)
         return {
             "scan.s": total("scan"),
             "scan.rows": sql["scan_rows"] / passes,
@@ -350,27 +407,31 @@ class ClusterCheckpoint:
             "udf.s": sql["py_s"] / passes,
             "udf.bytes_to_python": sql["py_sent"] / passes,
             "udf.bytes_from_python": sql["py_recv"] / passes,
-            "join.s": total("join"),
-            "join.candidate_rows": candidates / passes,
-            "join.exact_rows": exact / passes,
+            "join.s": total("join", under=pip_join),
+            "join.candidate_rows": candidates,
+            "join.exact_rows": exact,
             "join.exact_ratio": exact / candidates,
-            "rollup.s": total("stage.tiles", parent="pipeline.fresh"),
-            "rollup.cells": total("stage.tiles", "rows", parent="pipeline.fresh"),
+            "rollup.s": total("stage.tiles", under=fresh),
+            "rollup.cells": total("stage.tiles", "rows", under=fresh),
             "cover.s": total("cover"),
             "cover.cells": total("cover", "cells"),
+            "knn.s": total("knn"),
+            "knn.candidates_per_result": knn_candidates / total("knn", "rows"),
             "pairs.s": total("pairs"),
             "pairs.rows": total("pairs", "rows"),
             "components.s": total("components"),
             "components.jobs": comp_jobs / passes,
             "components.edges_in": total("components", "rows_in"),
-            "stage.encode_s": total("stage.encode", parent="pipeline.fresh"),
-            "stage.pip_s": total("stage.pip", parent="pipeline.fresh"),
-            "stage.tiles_s": total("stage.tiles", parent="pipeline.fresh"),
+            "stage.encode_s": total("stage.encode", under=fresh),
+            "stage.pip_s": total("stage.pip", under=fresh),
+            "stage.tiles_s": total("stage.tiles", under=fresh),
             "checkpoint.bytes_written_per_input_byte": written / input_bytes,
             "checkpoint.resume_read_s": statistics.median(resume),
             "spark.shuffle_bytes": sql["shuffle_bytes"] / passes,
             "spark.spill_bytes": sql["spill_bytes"] / passes,
-            "plan.optimized_bytes": T.optimized_plan_bytes(query_plan),
+            "plan.optimized_bytes": sum(T.optimized_plan_bytes(self.registry[q](self.spark, self.sf))
+                                        for q in self.queries),
+            "trace.overhead_s": overhead,
         }
 
 
@@ -391,4 +452,4 @@ def _snapshot_files(root: Path) -> dict[str, float]:
     return {str(p.relative_to(root)): p.stat().st_mtime_ns for p in root.rglob("*") if p.is_file()}
 
 
-WORKLOADS = {w.name: w for w in (TagRollup, ClusterCheckpoint)}
+WORKLOADS = {w.name: w for w in (TagRollup, QueryMix)}
