@@ -14,11 +14,13 @@ line is the result object; the line before it holds the run's context.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import itertools
 import json
 import os
 import shlex
 import shutil
+import signal
 import statistics
 import sys
 import time
@@ -26,6 +28,9 @@ from pathlib import Path
 
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
+
+
+PR_SET_CHILD_SUBREAPER = 36
 
 
 def _fail(msg: str) -> None:
@@ -51,6 +56,51 @@ def _proc_tree() -> list[int]:
             out.append(c)
             todo.append(c)
     return out
+
+
+def _adopt_orphans() -> None:
+    """Make this process the subreaper of its descendants: one whose parent
+    exits first (the multiprocessing resource tracker, a forked Python
+    worker) is re-parented here instead of to init, so :func:`_reap` can
+    still wait for it."""
+    import ctypes
+
+    ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+
+
+def _reap_children() -> None:
+    """Collect every child of this process that has already ended."""
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def _reap(grace: float = 20.0) -> None:
+    """Stop the resource tracker ``bench.measure_bw_ceiling``'s process
+    pool started, then wait until every descendant has ended: SIGTERM to
+    those still running after `grace` seconds, SIGKILL after twice that."""
+    from multiprocessing import resource_tracker
+
+    resource_tracker._resource_tracker._stop()
+    t0 = time.monotonic()
+    sent = None
+    while True:
+        _reap_children()
+        alive = _proc_tree()
+        if not alive:
+            return
+        waited = time.monotonic() - t0
+        sig = signal.SIGKILL if waited > 2 * grace else signal.SIGTERM if waited > grace else None
+        if sig is not None and sig != sent:
+            for pid in alive:
+                with contextlib.suppress(ProcessLookupError):
+                    os.kill(pid, sig)
+            sent = sig
+        time.sleep(0.05)
 
 
 class PeakRss:
@@ -156,14 +206,19 @@ def main() -> int:
         PYTHONPATH=os.pathsep.join([str(ROOT), os.environ.get("PYTHONPATH", "")]),
         SPARK_LOCAL_DIRS=str(work / "local"),
         TMPDIR=str(work / "tmp"),
-        # initial heap = max heap: a heap growing at GC-chosen moments makes
-        # pass walls drift down over a run's first minute
+        # initial heap = max heap, touched during set-up: a heap growing at
+        # GC-chosen moments, or faulting in fresh pages, makes pass walls
+        # drift down over a run's first minute
         PYSPARK_SUBMIT_ARGS=shlex.join(
-            ["--driver-java-options", f"-Xms{driver_gb}g -Djava.io.tmpdir={work / 'tmp'}", "pyspark-shell"]),
+            ["--driver-java-options", f"-Xms{driver_gb}g -XX:+AlwaysPreTouch -Djava.io.tmpdir={work / 'tmp'}",
+             "pyspark-shell"]),
         SPARK_GRAFT_DRIVER_MEM=f"{driver_gb}g",
     )
     import gen
 
+    _adopt_orphans()
+    # a terminated run still stops the JVM and waits for every process
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
     wl = workloads.WORKLOADS[args.workload]()
     rss = PeakRss()
     stolen0, total0 = _cpu_jiffies()
@@ -227,9 +282,12 @@ def main() -> int:
             "bw_ceiling_bytes_per_s": bench.measure_bw_ceiling(cpus, n=4_000_000, reps=5),
         }
     finally:
-        if spark is not None:
-            _stop(spark)
-        shutil.rmtree(work, ignore_errors=True)
+        try:
+            if spark is not None:
+                _stop(spark)
+        finally:
+            _reap()
+            shutil.rmtree(work, ignore_errors=True)
     print(json.dumps({"context": context}))
     print(json.dumps({"correct": not errors, "attempted": attempted, "failed": len(errors), "metrics": metrics}))
     return 1 if errors else 0

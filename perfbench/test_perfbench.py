@@ -3,7 +3,8 @@
     python3 -m pytest perfbench -q
 
 The traced-run test launches ``perfbench/run.py`` once per workload and
-takes a few minutes.
+takes a few minutes; it also checks that no process the run started
+outlives it.
 """
 
 from __future__ import annotations
@@ -117,15 +118,37 @@ def test_cached_input_is_reused(tmp_path):
     assert calls == [3] and first[0] == again[0] and again[1] == 0.0 and again[2] == {"pages": 40}
 
 
+def _session_members(sid: int) -> list[int]:
+    """Pids of the processes, ended-but-unreaped ones included, in session `sid`."""
+    found = []
+    for d in Path("/proc").iterdir():
+        if d.name.isdigit():
+            try:
+                stat = (d / "stat").read_text()
+            except OSError:
+                continue
+            if int(stat.rsplit(")", 1)[1].split()[3]) == sid:
+                found.append(int(d.name))
+    return found
+
+
 @pytest.mark.parametrize("workload", sorted(EXERCISED))
-def test_traced_run_emits_every_layer_metric(workload):
-    out = subprocess.run(
-        [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", "7",
-         "--seconds", "1", "--trace", "1"],
-        cwd=ROOT, capture_output=True, text=True, timeout=900,
-    )
-    assert out.returncode == 0, out.stderr[-3000:]
-    result = json.loads(out.stdout.strip().splitlines()[-1])
+def test_traced_run_emits_every_layer_metric(workload, tmp_path):
+    # the run leads a session of its own; no process of it may outlive it.
+    # Output goes to files, not pipes: a pipe's reader would wait for every
+    # process holding it, hiding one that ends just after the run
+    out, err = tmp_path / "out", tmp_path / "err"
+    with out.open("w") as o, err.open("w") as e:
+        proc = subprocess.Popen(
+            [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", "7",
+             "--seconds", "1", "--trace", "1"],
+            cwd=ROOT, stdout=o, stderr=e, start_new_session=True,
+        )
+        proc.wait(timeout=900)
+    assert _session_members(proc.pid) == []
+    assert proc.returncode == 0, err.read_text()[-3000:]
+    stdout = out.read_text()
+    result = json.loads(stdout.strip().splitlines()[-1])
     assert result["correct"] and result["failed"] == 0
     names = {m["name"] for m in SPEC["per_layer"]}
     assert set(result["metrics"]) == names

@@ -81,6 +81,7 @@ class TagRollup:
     rows = 2_000_000
     files = 16
     ops = ("tag_rollup",)
+    warm_passes = 2
     min_passes = 5
     traced_passes = 2
     encode_arm = "native"
@@ -131,10 +132,12 @@ class TagRollup:
         return bench.throughput_result_df(self.spark, with_cell_id(self.scan(path), level=30), self.cov)
 
     def warm(self) -> None:
-        """One untimed pass before measuring: the first pass on a fresh JVM
+        """Untimed passes before measuring: the first pass on a fresh JVM
         runs mostly interpreted while the job's generated code compiles,
-        and takes about three times a later pass."""
-        self.job().collect()
+        and takes about three times a later pass; the next few still
+        speed up while the JIT compiles the driver's planning code."""
+        for _ in range(self.warm_passes):
+            self.job().collect()
 
     def run(self, op: str):
         row = self.job().collect()[0]
