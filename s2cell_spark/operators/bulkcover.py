@@ -6,13 +6,13 @@ handful of query regions, wrong for a user joining pages against
 10^5-10^6 admin/geofence polygons, where every covering BFS would
 serialize through the driver before the join starts. Here the polygons
 are a DataFrame and the covering runs as an executor-side
-``mapInPandas`` stage (the numpy coverer kernels are already
+``mapInArrow`` stage (the numpy coverer kernels are already
 batch-friendly), so covering cost scales out with polygon-table
 partitions and the driver never sees a vertex.
 
 Pipeline (``bulk_pip_join``):
 
-1. polygons (region_id, rings) --mapInPandas--> mixed-level covering
+1. polygons (region_id, rings) --mapInArrow--> mixed-level covering
    rows (region_id, cell_id, level);
 2. native single-level normalization (containment.normalize_covering_df
    — explode/sequence, no driver);
@@ -36,7 +36,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -78,31 +78,39 @@ def cover_polygons(
     parallelizes across the cluster instead of the driver.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            # rings: list<list<struct<lat, lon>>> — each level's offsets
+            # index the child below it, down to one vertex column per batch
+            polys = batch.column(rings_col)
+            ring_at = polys.offsets.to_numpy()
+            vert_at = polys.values.offsets.to_numpy()
+            verts = polys.values.values
+            pts = np.column_stack(
+                [verts.field(c).to_numpy(zero_copy_only=False) for c in ("lat", "lon")]
+            )
             rids, cells = [], []
-            for rid, rings in zip(pdf[id_col], pdf[rings_col]):
-                arrs = [
-                    np.array([(v["lat"], v["lon"]) for v in ring], dtype=np.float64)
-                    for ring in rings
+            for p, rid in enumerate(batch.column(id_col).to_numpy()):
+                rings = [
+                    pts[vert_at[r] : vert_at[r + 1]]
+                    for r in range(ring_at[p], ring_at[p + 1])
                 ]
                 cov = COV.polygon_covering(
-                    arrs, max_level=max_level, min_emit_level=min_emit_level
+                    rings, max_level=max_level, min_emit_level=min_emit_level
                 )
                 rids.append(np.full(cov.shape, rid, dtype=np.int64))
                 cells.append(cov)
             cell_arr = np.concatenate(cells) if cells else np.empty(0, np.uint64)
-            yield pd.DataFrame(
-                {
-                    "region_id": np.concatenate(rids) if rids else np.empty(0, np.int64),
-                    "cell_id": cell_arr.view(np.int64),
-                    "level": K.cell_id_to_level(cell_arr).astype(np.int32),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate(rids) if rids else np.empty(0, np.int64)),
+                    pa.array(cell_arr.view(np.int64)),
+                    pa.array(K.cell_id_to_level(cell_arr).astype(np.int32)),
+                ],
+                names=["region_id", "cell_id", "level"],
             )
 
-    return polygons.select(id_col, rings_col).mapInPandas(run, schema=_COV_SCHEMA)
+    return polygons.select(id_col, rings_col).mapInArrow(run, schema=_COV_SCHEMA)
 
 
 def pip_parity_expr(rings: Column, lat: Column, lon: Column) -> Column:

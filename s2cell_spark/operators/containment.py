@@ -9,7 +9,7 @@ equivalently ``parent(d, level(c)) == c``. Three join strategies:
    pages side, no shuffle of it (broadcast), Catalyst-native. Default.
 2. :func:`containment_join_range` — mixed-level coverings without
    expansion: broadcast the sorted ``[range_min, range_max]`` sortable
-   intervals and binary-search each Arrow batch (`mapInPandas` +
+   intervals and binary-search each Arrow batch (`mapInArrow` +
    np.searchsorted). Avoids the O(n·m) BroadcastNestedLoopJoin Spark would
    pick for a non-equi range condition.
 3. :func:`containment_join_salted` — strategy 1 plus explicit hot-cell
@@ -29,13 +29,14 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from s2cell_spark import functions as S2F
 from s2cell_spark import kernels as K
-from s2cell_spark.operators import covering as COV
 
 
 def coverings_df(
@@ -226,24 +227,12 @@ def containment_join_range(
         list(pages.schema.fields) + [StructField("region_id", LongType(), False)]
     )
 
-    # null cells can't be contained anywhere; they are dropped INSIDE the
-    # Arrow stab (pandas mask per batch), NOT as a plan-level filter —
-    # a Filter on `cell_col` would be pushed through whatever projection
-    # stack produced it, and pushdown SUBSTITUTES aliases into the
-    # condition: through the native encode stack (functions/
-    # native_encode) that expansion is multiplicative and planning OOMs
-    # (the CLAUDE.md native-cell filter-pushdown trap). The in-batch drop
-    # also still guarantees int64 Arrow batches (a nullable long batch
-    # with actual nulls degrades to float64 and corrupts IDs over 2^53 —
-    # dropped rows never reach the searchsorted).
-
-    def stab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf[cell_col].isna().any():
-                pdf = pdf[pdf[cell_col].notna()]
-            if pdf.empty:
-                continue
-            cells = pdf[cell_col].to_numpy(np.int64).view(np.uint64)
+    def stab(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            # null cells can't be contained anywhere; Arrow keeps the
+            # int64 bits of the cells sharing their batch intact
+            batch = batch.filter(pc.is_valid(batch.column(cell_col)))
+            cells = batch.column(cell_col).to_numpy().view(np.uint64)
             sortable = (cells ^ np.uint64(1 << 63)).view(np.int64)
             pos = np.searchsorted(lo_arr, sortable, side="right")
             out_rows = []
@@ -265,26 +254,10 @@ def containment_join_range(
                 w += 1
             if not out_rows:
                 continue
-            rows = np.concatenate(out_rows)
-            rids_out = np.concatenate(out_rids)
-            res = pdf.iloc[rows].copy()
-            res["region_id"] = rids_out
-            yield res
+            res = batch.take(pa.array(np.concatenate(out_rows)))
+            yield res.append_column("region_id", pa.array(np.concatenate(out_rids)))
 
-    return pages.mapInPandas(stab, schema=schema)
-
-
-def filter_in_rect(
-    df: DataFrame, lat_lo: float, lat_hi: float, lon_lo: float, lon_hi: float
-) -> DataFrame:
-    """Exact rectangle test (closed bounds) — the PIP 'exact' stage for
-    rectangular regions; native so it stays in codegen."""
-    return df.filter(
-        (F.col("lat") >= lat_lo)
-        & (F.col("lat") <= lat_hi)
-        & (F.col("lon") >= lon_lo)
-        & (F.col("lon") <= lon_hi)
-    )
+    return pages.mapInArrow(stab, schema=schema)
 
 
 def point_in_polygon_udf(rings: list[np.ndarray]):
@@ -294,15 +267,16 @@ def point_in_polygon_udf(rings: list[np.ndarray]):
     across rings supports holes. Planar semantics (edges are straight in
     lat/lon) — documented engine semantic; polygons crossing the
     antimeridian must be pre-split by the caller. Returns a BooleanType
-    pandas UDF usable as ``df.filter(pip(F.col('lat'), F.col('lon')))``
+    Arrow UDF usable as ``df.filter(pip(F.col('lat'), F.col('lon')))``
     after covering-cell candidate pruning.
     """
     closed = [np.asarray(r, dtype=np.float64) for r in rings]
 
-    @F.pandas_udf("boolean")
-    def pip(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        y = lat.to_numpy(np.float64)
-        x = lon.to_numpy(np.float64)
+    @F.arrow_udf("boolean")
+    def pip(lat: pa.Array, lon: pa.Array) -> pa.Array:
+        # nulls read as NaN, which no crossing test accepts
+        y = lat.to_numpy(zero_copy_only=False)
+        x = lon.to_numpy(zero_copy_only=False)
         inside = np.zeros(y.shape, dtype=bool)
         for ring in closed:
             ry, rx = ring[:, 0], ring[:, 1]
@@ -315,6 +289,6 @@ def point_in_polygon_udf(rings: list[np.ndarray]):
                     x < (x2 - x1) * (y - y1) / (y2 - y1) + x1
                 )
                 inside ^= cond
-        return pd.Series(inside)
+        return pa.array(inside)
 
     return pip

@@ -2,7 +2,7 @@
 
 * :func:`cosine_topk_bruteforce` — exact top-k cosine neighbors for a
   (small, broadcast) query set against the full embeddings table. The dot
-  products run in one Arrow-batched pandas UDF as a single numpy matmul
+  products run in one ``mapInArrow`` stage as a single numpy matmul
   per batch (queries broadcast in the closure) — the right baseline and
   exactly what the oracle can check.
 * :func:`cosine_near_dup_pairs` — all pairs above a cosine threshold via
@@ -23,16 +23,21 @@ never a cross join.
 from __future__ import annotations
 
 from pathlib import Path
+from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 
-def _to_matrix(col: pd.Series) -> np.ndarray:
-    return np.vstack([np.asarray(v, dtype=np.float64) for v in col])
+def _to_matrix(col: pa.Array) -> np.ndarray:
+    """(rows, dim) float64 matrix of a list<float|double> column; the
+    fixed-size cast raises if the rows differ in width."""
+    dim = len(col[0]) if len(col) else 0
+    flat = col.cast(pa.list_(pa.float64(), dim)).flatten()
+    return flat.to_numpy().reshape(len(col), dim)
 
 
 def cosine_topk_bruteforce(
@@ -61,33 +66,30 @@ def cosine_topk_bruteforce(
         ]
     )
 
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
+    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            mat = _to_matrix(pdf[vec_col])
+            mat = _to_matrix(batch.column(vec_col))
             mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
             sims = q_norm @ mat.T  # (nq, batch)
             nq, nb = sims.shape
-            ids = pdf[id_col].to_numpy(np.int64)
-            res = pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, nb),
-                    "vec_id": np.tile(ids, nq),
-                    "cosine": sims.ravel(),
-                }
-            )
-            if exclude_self:
-                res = res[res["query_id"] != res["vec_id"]]
+            qid = np.repeat(q_ids, nb)
+            vid = np.tile(batch.column(id_col).to_numpy(), nq)
+            cos = sims.ravel()
+            keep = qid != vid if exclude_self else np.ones(qid.shape, dtype=bool)
+            qid, vid, cos = qid[keep], vid[keep], cos[keep]
             # keep only the per-batch top-k per query — bounds shuffle size
-            res = (
-                res.sort_values(["query_id", "cosine", "vec_id"], ascending=[True, False, True])
-                .groupby("query_id")
-                .head(k)
+            order = np.lexsort((vid, -cos, qid))
+            q_sorted = qid[order]
+            first = np.searchsorted(q_sorted, q_sorted, side="left")
+            top = order[np.arange(len(order)) - first < k]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(qid[top]), pa.array(vid[top]), pa.array(cos[top])],
+                names=["query_id", "vec_id", "cosine"],
             )
-            yield res
 
-    partial = embeddings.select(id_col, vec_col).mapInPandas(score, out_schema)
+    partial = embeddings.select(id_col, vec_col).mapInArrow(score, out_schema)
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (
         partial.withColumn("rank", F.row_number().over(w))
@@ -122,15 +124,15 @@ def _seq_dot(planes: np.ndarray, mat: np.ndarray) -> np.ndarray:
 
 
 def srp_bucket_udf(dim: int, n_bits: int = 16, seed: int = 23):
-    """Sign-random-projection bucket id (n_bits-bit) pandas UDF."""
+    """Sign-random-projection bucket id (n_bits-bit) Arrow UDF."""
     planes = srp_planes(dim, n_bits, seed)
 
-    @F.pandas_udf(LongType())
-    def bucket(vec: pd.Series) -> pd.Series:
+    @F.arrow_udf(LongType())
+    def bucket(vec: pa.Array) -> pa.Array:
         mat = _to_matrix(vec)
         signs = _seq_dot(planes, mat) > 0  # (n_bits, n)
         weights = (1 << np.arange(n_bits, dtype=np.int64))[:, None]
-        return pd.Series((signs * weights).sum(axis=0).astype(np.int64))
+        return pa.array((signs * weights).sum(axis=0).astype(np.int64))
 
     return bucket
 
@@ -218,15 +220,15 @@ def ivf_probes(
 
 
 def ivf_assign_udf(cents: np.ndarray):
-    """Nearest-centroid assignment pandas UDF (shared by the one-shot
+    """Nearest-centroid assignment Arrow UDF (shared by the one-shot
     query path and the bucketed index writer)."""
 
-    @F.pandas_udf(LongType())
-    def assign(vec: pd.Series) -> pd.Series:
+    @F.arrow_udf(LongType())
+    def assign(vec: pa.Array) -> pa.Array:
         mat = _to_matrix(vec)
         # unnormalized dot: argmax is scale-invariant (|v| > 0), and the
         # sequential accumulation order matches the oracle's SQL fold
-        return pd.Series(np.argmax(_seq_dot(cents, mat), axis=0).astype(np.int64))
+        return pa.array(np.argmax(_seq_dot(cents, mat), axis=0).astype(np.int64))
 
     return assign
 

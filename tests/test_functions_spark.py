@@ -173,32 +173,68 @@ def test_sql_registration(spark):
 
 
 def test_nullable_long_batch_does_not_corrupt(spark):
-    """A LongType batch containing a null arrives in pandas as float64,
-    destroying bits above 2^53 — the Column API must still return exact
-    results for the valid rows sharing the batch (regression: it used to
-    silently emit the token of the wrong cell)."""
-    import numpy as np
-
-    from s2cell_spark import functions as S2F
+    """A null shares one Arrow batch with a leaf cell above 2^53 (through
+    pandas such a batch arrived as float64 and lost the leaf's low bits).
+    Every cell-ID boundary — the S2F Column API and the
+    register_sql_functions names — must return exact results for the
+    leaf and null for the null."""
     from s2cell_spark import kernels as K
 
     big = 4611686018427400249  # odd leaf id, > 2^53
     df = spark.createDataFrame([(big,), (None,)], "cid long").coalesce(1)
-    got = {
-        r["cid"]: (r["tok"], r["lvl"], (r["ll"]["lat"] if r["ll"] else None))
-        for r in df.select(
-            "cid",
-            S2F.s2_cell_id_to_token(F.col("cid")).alias("tok"),
-            S2F.s2_cell_id_to_level(F.col("cid")).alias("lvl"),
-            S2F.cell_id_to_lat_lon(F.col("cid")).alias("ll"),
-        ).collect()
-    }
-    want_tok = K.cell_id_to_token(np.array([big], dtype=np.uint64))[0]
-    want_lat = K.cell_id_to_lat_lon(np.array([big], dtype=np.uint64))[0][0]
-    assert got[big][0] == want_tok
-    assert got[big][1] == 30
-    assert abs(got[big][2] - want_lat) < 1e-12
-    assert got[None] == (None, None, None)
+    column_api = df.select(
+        "cid",
+        S2F.s2_cell_id_to_token(F.col("cid")).alias("tok"),
+        S2F.s2_cell_id_to_level(F.col("cid")).alias("lvl"),
+        S2F.s2_cell_id_is_valid(F.col("cid")).alias("valid"),
+        S2F.cell_id_to_lat_lon(F.col("cid")).alias("ll"),
+        S2F.s2_cell_id_to_face_ij(F.col("cid")).alias("fij"),
+        S2F.neighbor_cell_ids(F.col("cid"), edge=True, corner=True).alias("nbrs"),
+    )
+    S2F.register_sql_functions(spark)
+    df.createOrReplaceTempView("nullable_cells")
+    sql_api = spark.sql(
+        "SELECT cid, s2_cell_id_to_token(cid) AS tok, s2_cell_id_to_level(cid) AS lvl, "
+        "s2_cell_id_is_valid(cid) AS valid, s2_cell_id_to_lat_lon(cid) AS ll, "
+        "s2_cell_id_to_face_ij(cid) AS fij, s2_neighbor_cell_ids(cid, true, true) AS nbrs "
+        "FROM nullable_cells"
+    )
+    cell = np.array([big], dtype=np.uint64)
+    lat, lon = K.cell_id_to_lat_lon(cell)
+    face, i, j = K.cell_id_to_face_ij(cell)
+    grid, valid, _ = K.cell_id_to_neighbor_cell_ids_grid(cell)
+    for api, out in (("column", column_api), ("sql", sql_api)):
+        got = {r["cid"]: r for r in out.collect()}
+        leaf = got[big]
+        assert leaf["tok"] == K.cell_id_to_token(cell)[0], api
+        assert leaf["lvl"] == 30 and leaf["valid"] is True, api
+        assert abs(leaf["ll"]["lat"] - lat[0]) < 1e-12, api
+        assert abs(leaf["ll"]["lon"] - lon[0]) < 1e-12, api
+        assert tuple(leaf["fij"]) == (int(face[0]), int(i[0]), int(j[0])), api
+        assert leaf["nbrs"] == [int(x) for x in grid.view(np.int64)[0][valid[0]]], api
+        nulls = got[None]
+        assert all(nulls[c] is None for c in ("tok", "lvl", "valid", "ll", "fij", "nbrs")), api
+
+
+def test_python_boundaries_are_arrow_native():
+    """One Python boundary idiom: Arrow UDFs and mapInArrow. The package
+    names pandas_udf / mapInPandas only for the encode, whose inputs are
+    doubles and whose ``.func`` callers re-wrap as a pandas UDF."""
+    import re
+    from pathlib import Path
+
+    import s2cell_spark
+
+    root = Path(s2cell_spark.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        lines = path.read_text().splitlines() + [""]
+        for n, line in enumerate(lines):
+            if re.search(r"pandas_udf|mapInPandas", line):
+                hits.append((path.relative_to(root).as_posix(), lines[n + 1].strip()))
+    assert len(hits) == 1, hits
+    assert hits[0][0] == "functions/udfs.py"
+    assert hits[0][1].startswith("def s2_lat_lon_to_cell_id("), hits
 
 
 def test_face_ij_out_of_range_is_null(spark):

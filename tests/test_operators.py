@@ -69,6 +69,19 @@ def test_range_join_matches_equi(spark, pages):
     assert a == b
 
 
+def test_range_join_keeps_leaf_sharing_a_batch_with_a_null_cell(spark):
+    """A null cell and a leaf cell above 2^53 in ONE Arrow batch: the
+    leaf, covered exactly by its region, must still join (through pandas
+    the batch became float64, the leaf's low bits were lost and it
+    matched nothing)."""
+    big = 4611686018427400249  # odd leaf id, > 2^53
+    pages = spark.createDataFrame([(1, big), (2, None)], "doc_id long, cell_id long")
+    rows = CJ.containment_join_range(
+        pages.coalesce(1), {7: np.array([big], dtype=np.uint64)}
+    ).collect()
+    assert [tuple(r) for r in rows] == [(1, big, 7)]
+
+
 def test_polygon_pip_vs_numpy_oracle(spark, pages):
     """Triangle PIP through covering join + ray-cast UDF vs a brute-force
     numpy ray-cast over ALL pages."""
@@ -1311,6 +1324,23 @@ def test_connected_components_vs_union_find(spark):
             ).collect()
         }
         assert got == uf_labels(edges, nodes)
+
+
+def test_connected_components_budget_is_rounds_plus_one_confirming_round(spark):
+    """max_rounds counts star rounds, each checked: a graph whose edge
+    set reaches its fixed point at round r converges with max_rounds =
+    r + 1 (r rounds plus the round that confirms the fixed point) and
+    raises with r. The 6-node path 0-1-2-3-4-5 reaches it at round 3."""
+    from s2cell_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(5)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="no convergence in 3 rounds"):
+        connected_components(edges, max_rounds=3)
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(edges, max_rounds=4).collect()
+    }
+    assert got == {n: 0 for n in range(6)}
 
 
 def test_streaming_radius_alerts_match_batch(spark, tmp_path):

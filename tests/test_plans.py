@@ -494,13 +494,13 @@ def test_throughput_job_single_pass_encodes_every_page(spark, entry, tmp_path, a
 
 def test_bulk_pip_covering_runs_on_executors_and_exact_stage_is_native(spark, entry):
     """The bulk-PIP pipeline's scale contract: the polygon coverings are
-    an EXECUTOR stage (MapInPandas over the polygons frame, below a
+    an EXECUTOR stage (MapInArrow over the polygons frame, below a
     broadcast — never a per-polygon driver loop), the exact ray-cast is
     a native higher-order-function filter (no second Python node — the
     only ArrowEvalPython is the pages S2-encode kernel), and the pages
     side joins by broadcast with no sort-merge anywhere."""
     plan = _plan(entry._q_pip_regions_bulk(spark, SF))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan
     assert plan.count("ArrowEvalPython") == 1  # the pages S2-encode kernel
     assert "BroadcastHashJoin" in plan
@@ -511,3 +511,23 @@ def test_bulk_pip_covering_runs_on_executors_and_exact_stage_is_native(spark, en
     for line in plan.splitlines():
         if "Exchange hashpartitioning" in line:
             assert "doc_id" not in line and "url" not in line
+
+
+def test_star_round_broadcasts_its_neighborhood_minima(spark):
+    """A components star round joins edges against per-node minima
+    (large star, then small star). A checkpointed edge set carries no
+    size estimate, so the stats gate cannot hint and every join plans
+    as sort-merge; adaptive execution must turn each into a broadcast
+    once the round's shuffles report their sizes. Pinned on the final
+    plan of an executed round."""
+    from s2cell_spark.operators.components import _star_round
+
+    edges = spark.createDataFrame(
+        [(i + 1, i) for i in range(50)], "u long, v long"
+    ).localCheckpoint(eager=True)
+    rnd = _star_round(edges)
+    rnd.collect()
+    final = _plan(rnd).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert "BroadcastHashJoin" in final
+    assert "SortMergeJoin" not in final and "ShuffledHashJoin" not in final
